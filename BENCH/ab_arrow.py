@@ -1,6 +1,6 @@
 """Interleaved Arrow maxRecordsPerBatch sweep over the fused extraction
 pass (VERDICT r3 #7): one knob controls Python-side batch locality for
-the single ArrowEvalPython node, so measure it instead of guessing.
+the single MapInArrow node, so measure it instead of guessing.
 
 maxRecordsPerBatch is a runtime SQLConf — one JVM, set per run, fully
 interleaved rounds so VM throttling windows hit every size equally.

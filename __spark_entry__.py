@@ -98,7 +98,7 @@ def entry(spark: SparkSession) -> DataFrame:
 
     docs = _docs(spark, "/root/testdata/sf0.001")
     spans = text_docs_to_span_table(docs)
-    out = extract_pipeline(spans, with_resume=True)
+    out = extract_pipeline(spans)
     return out.select(
         "doc_id",
         "blocks_kept",

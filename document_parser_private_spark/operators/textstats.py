@@ -86,17 +86,6 @@ def quality_score_col(text: Column) -> Column:
     return F.round(score, 6)
 
 
-def lang_guess_col(text: Column) -> Column:
-    scores = {lang: _hits(text, LANG_MARKERS[lang]) for lang in LANG_PRIORITY}
-    best = F.greatest(*[scores[lang] for lang in LANG_PRIORITY])
-    expr = F.lit("und")
-    for lang in reversed(LANG_PRIORITY):
-        expr = F.when(
-            (scores[lang] == best) & (best > 0), F.lit(lang)
-        ).otherwise(expr)
-    return expr
-
-
 # ASCII subset of PY_WS_JRE (covers every ASCII Python-ws codepoint, so
 # it is IDENTICAL to the full class on pure-ASCII strings — PLANS.md §8)
 _ASCII_WS_INNER = r"\x{9}-\x{d}\x{1c}-\x{1f}\x{20}"
@@ -131,9 +120,9 @@ def with_textstats(df: DataFrame, text_col: str = "text") -> DataFrame:
     and RE2, see TOKEN_WS_INNER note; the DuckDB twins already evaluate
     them in RE2). quality_score's final rounding replicates Spark's
     Round(HALF_UP over BigDecimal.valueOf) exactly via
-    Decimal(repr(x)); lang/NULL semantics mirror the native columns
-    (null text -> null stats, lang 'und'). The native *_col expressions
-    above remain exported for composition.
+    Decimal(repr(x)); NULL semantics mirror the native columns (null
+    text -> null stats); no marker hit -> lang 'und'. The native *_col
+    expressions above remain exported for composition.
     """
     from pyspark.sql import types as ST
 
@@ -321,10 +310,6 @@ def simhash64_udf(text: pd.Series) -> pd.Series:
 
 def with_simhash(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("simhash", simhash64_udf(F.col(text_col)))
-
-
-def hamming64_col(a: Column, b: Column) -> Column:
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 SIMHASH_BITS = 60  # 60-bit fits signed int64 on both engines with headroom

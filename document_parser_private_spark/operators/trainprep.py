@@ -285,22 +285,6 @@ def _ngram_rows_arrow(df: DataFrame, n: int, id_col: str, text_col: str,
     return df.select(id_col, text_col).mapInArrow(build, schema)
 
 
-def _gram_hashes(text_col, n: int):
-    """md5 hashes of the text's token n-grams (ASCII token contract,
-    space-joined). Tokens are bound once; the per-gram work inside the
-    transform touches only the bound lambda variable."""
-    return bind_once(
-        F.regexp_extract_all(text_col, F.lit(WORD_RE), F.lit(0)),
-        lambda toks: F.when(
-            F.size(toks) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, n))),
-            ),
-        ).otherwise(F.array().cast("array<string>")),
-    )
-
-
 def decontaminate(df: DataFrame, benchmark: DataFrame, n: int = 8,
                   text_col: str = "text", id_col: str = "doc_id",
                   bench_text_col: str = "text") -> DataFrame:

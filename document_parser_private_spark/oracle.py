@@ -3,14 +3,18 @@
 Computes, per document, the golden expected outputs the Spark pipeline must
 match (BASELINE.json per-row invariant: span-sequence equality on
 (kind, text, media_ref, order)). Shares the deterministic core with the
-pandas-UDF stages via ``semantics`` so behavior is defined exactly once;
-the *native-Spark* stages (layout sort, boilerplate classification, regex
-extraction) are independent implementations tested against this oracle.
+fused extraction pass (operators/resume.extract_all_fused_op, which calls
+`classify_and_emit` itself) via ``semantics`` so behavior is defined
+exactly once; the *native-Spark* projections (contact, summary,
+certifications) are independent implementations tested against this
+oracle.
 
 Stages (mirrors plans/pipeline.py):
-  1. layout: sort spans by `offset` ascending (reading order; see
-     corpus.py offset contract)
-  2. classify: media-anchor / boilerplate / content; drop boilerplate
+  1. classify: media-anchor / boilerplate / content; drop boilerplate
+     (order-free, original geometric offsets kept)
+  2. layout: reading-order inference over the kept spans (line
+     clustering by y, column detection by x-gap; see corpus.py offset
+     contract)
   3. re-emit spans with offsets renumbered 0..n-1 in reading order;
      image spans become kind='media-anchor'
   4. section FSM over kept textual spans

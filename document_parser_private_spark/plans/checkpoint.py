@@ -10,7 +10,8 @@ partition; parquet is used because the sandbox ships no Iceberg runtime):
     out_dir/extracted/part=<p>/...   extraction output, dynamic overwrite
     out_dir/lineage/...              append-only ledger: one row per
                                      completed partition per run
-    out_dir/metrics/...              extraction metrics per partition
+    out_dir/metrics/...              extraction metrics per partition,
+                                     read back from committed data
 
 Correctness argument (kill anywhere, rerun, identical final output):
   1. a partition's data is written with dynamic partition overwrite —
@@ -125,10 +126,9 @@ def run_with_checkpoint(
             group = pending[i:i + parts_per_commit]
             started = time.time()
             chunk = df.where(F.col("part").isin(group))
-            result = extract_pipeline(chunk).join(
+            flat = extract_pipeline(chunk).join(
                 chunk.select("doc_id", "part"), "doc_id"
-            )
-            flat = result.select(
+            ).select(
                 "doc_id", "part", "blocks_kept", "blocks_dropped",
                 F.to_json("clean_spans").alias("clean_spans_json"),
                 F.to_json("sections").alias("sections_json"),
@@ -140,9 +140,14 @@ def run_with_checkpoint(
             flat.write.mode("overwrite").partitionBy("part").parquet(
                 f"{out_dir}/extracted"
             )
-            # 2. metrics append
+            # 2. metrics append, computed from the partitions just
+            # committed (partition-pruned read-back): the ledger describes
+            # committed data, and the fused pass runs once per doc
+            committed = spark.read.parquet(f"{out_dir}/extracted").where(
+                F.col("part").isin(group)
+            )
             metrics = (
-                result.groupBy("part")
+                committed.groupBy("part")
                 .agg(
                     F.count("*").alias("doc_count"),
                     F.sum("blocks_kept").alias("blocks_kept"),

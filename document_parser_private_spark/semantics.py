@@ -6,9 +6,9 @@ block classifier, date parsing, and the normalizer chains. It is consumed
 from two places:
 
   1. ``oracle.py`` — the golden-fixture generator used by the tests, and
-  2. the vectorized pandas-UDF operators (``operators/sections.py`` etc.),
-     which call these functions per document while Arrow batches documents
-     across the partition.
+  2. the fused extraction pass (``operators/resume.extract_all_fused_op``)
+     and the few pandas-UDF operators, which call these functions per
+     document while Arrow batches documents across the partition.
 
 Everything here is a from-scratch reimplementation of the *behavior* of the
 reference pipeline (amos-maganyane/document-parser-private); citations point
@@ -17,7 +17,6 @@ at the behavior being mirrored:
   - section FSM            -> reference parsing_engine/section_detector.py:31-107
   - heading match + retry  -> reference parsing_engine/section_detector.py:109-133
   - date-pattern inference -> reference parsing_engine/section_detector.py:151-161
-  - heading classifier     -> reference parsing_engine/pdf_parser.py:215-219
   - date normalization     -> reference normalization/date_normalizer.py:33-144
                               (deterministic subset: no dateparser; 'Present'
                               pinned to an explicit ``as_of`` date)
@@ -55,13 +54,6 @@ AS_OF = date(2025, 7, 11)  # pinned replacement for date.today() ("Present")
 # the recognition regexes below is intentionally ASCII on all three engines
 # (Python patterns pinned with re.ASCII), so e.g. "page\xa03" is content on
 # every side rather than furniture on one.
-PY_WS_CODEPOINTS = (
-    0x09, 0x0A, 0x0B, 0x0C, 0x0D, 0x1C, 0x1D, 0x1E, 0x1F, 0x20,
-    0x85, 0xA0, 0x1680,
-    0x2000, 0x2001, 0x2002, 0x2003, 0x2004, 0x2005, 0x2006, 0x2007,
-    0x2008, 0x2009, 0x200A, 0x2028, 0x2029, 0x202F, 0x205F, 0x3000,
-)
-PY_WS_CHARS = "".join(chr(c) for c in PY_WS_CODEPOINTS)
 # Character class usable verbatim in Java regex (Spark) and RE2 (DuckDB).
 # Rendered as RANGES, not 29 singleton escapes: the long form measurably
 # collapses whole-stage-codegen performance when the pattern literal is
@@ -277,13 +269,14 @@ def detect_sections(lines: list[str]) -> dict[str, str]:
 # The reference has no boilerplate stripper (it parses single resumes); the
 # north_star mandates one (Boilerpipe/Readability-style link-density +
 # block-tag scoring). These rules are therefore defined HERE as the
-# authoritative semantics, implemented natively in Spark (operators/
-# classify.py) and mirrored by the oracle. Every rule is a deterministic
-# regex/ratio on the span text.
+# authoritative semantics, run by the fused extraction pass (operators/
+# resume.extract_all_fused_op) and by the oracle. Every rule is a
+# deterministic regex/ratio on the span text.
 
-# Pattern SOURCE STRINGS shared verbatim with the JVM side
-# (operators/classify.py). Constraints that keep one string valid and
-# equivalent on both engines:
+# Pattern SOURCE STRINGS are kept portable, so one string means the same
+# in Python and in Java regex / RE2 (a native or SQL twin can reuse it
+# verbatim). Constraints that keep one string valid and equivalent on
+# every engine:
 #   - compiled with re.ASCII in Python so \s \S \d \w \b match Java/RE2
 #     defaults (ASCII); the classification token syntax is intentionally
 #     ASCII — see the whitespace contract above;
@@ -377,15 +370,6 @@ def classify_span(kind: str, text: str, media_ref: Optional[str]) -> str:
         ):
             return "boilerplate"
     return "content"
-
-
-def is_heading_block(font_size: float, font_name: str, text: str) -> bool:
-    """Heading classifier (pdf_parser.py:215-219)."""
-    return (
-        font_size >= 12
-        or font_name.startswith("CMBX")
-        or any(w.strip().isupper() for w in text.split())
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,14 @@
 """Structured Streaming variant of the extraction pipeline.
 
 The reference is strictly batch (SURVEY §2.9) and the north_rule targets
-batch Iceberg snapshots, but the extraction transforms are all narrow
-per-document maps — so the identical operator chain runs unchanged as a
-streaming query (`readStream` on a documents directory → transforms →
-`writeStream`). This module exists to prove that property and to provide
-the micro-batch ingestion path a continuously-fed 100 TB corpus would
-use (file-source backpressure via maxFilesPerTrigger; exactly-once via
-the streaming checkpoint + idempotent sink).
+batch Iceberg snapshots, but extraction is a narrow per-document map —
+so the batch pipeline itself (plans/pipeline.extract_pipeline, one fused
+mapInArrow pass) runs unchanged as a streaming query (`readStream` on a
+documents directory → extract_pipeline → `writeStream`). This module
+exists to prove that property and to provide the micro-batch ingestion
+path a continuously-fed 100 TB corpus would use (file-source
+backpressure via maxFilesPerTrigger; exactly-once via the streaming
+checkpoint + idempotent sink).
 
 Also includes the canonical event-time windowed aggregation with
 watermark (late-data handling) over an events stream.
@@ -19,9 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..corpus import DOCS_DDL
-from ..operators.classify import classify_spans
-from ..operators.layout import layout_order_op
-from ..operators.sections import detect_sections_op
+from ..plans.pipeline import extract_pipeline
 
 
 def stream_extract(
@@ -29,7 +28,8 @@ def stream_extract(
     input_dir: str,
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
-    """readStream(documents dir) -> layout -> classify -> sections.
+    """readStream(documents dir) -> extract_pipeline (no salted
+    exchange), the same fused pass batch runs.
 
     No shuffle anywhere: every micro-batch is a pure narrow map, so the
     query needs no state store and sustains source-rate throughput.
@@ -40,12 +40,7 @@ def stream_extract(
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.load(input_dir)
-    out = detect_sections_op(
-        layout_order_op(classify_spans(docs, renumber=False))
-    )
-    return out.select(
-        "doc_id", "clean_spans", "blocks_kept", "blocks_dropped", "sections"
-    )
+    return extract_pipeline(docs, repartition=False)
 
 
 def run_stream_to_parquet(

@@ -1,12 +1,13 @@
-"""Property parity: the NATIVE classify filter (Catalyst higher-order
-expressions, JVM regex) must agree with the Python reference semantics
-(semantics.classify_span) on adversarial strings — unicode, regex
-metacharacters, URL-ish tokens, page furniture."""
+"""Property parity: the shipped extraction pipeline (extract_pipeline, one
+fused mapInArrow pass) keeps exactly the spans the Python reference
+semantics (semantics.classify_span) keep, on adversarial strings —
+unicode, regex metacharacters, URL-ish tokens, page furniture — so the
+Arrow decode/encode path round-trips every kept text unchanged."""
 
 from hypothesis import given, settings, strategies as st
 
 from document_parser_private_spark import semantics as S
-from document_parser_private_spark.operators.classify import classify_spans
+from document_parser_private_spark.plans.pipeline import extract_pipeline
 
 TRICKY = st.one_of(
     st.text(max_size=40),
@@ -26,7 +27,8 @@ TRICKY = st.one_of(
 
 @settings(max_examples=40, deadline=None)
 @given(st.lists(TRICKY, min_size=1, max_size=12))
-def _prop_native_matches_python(spark, texts):
+def _prop_pipeline_matches_python(spark, texts):
+    # one span per text line (distinct y, x=0): layout order == input order
     spans = [
         {"kind": "text", "text": t, "media_ref": None,
          "offset": S.encode_offset(3 * i, 0)}
@@ -37,19 +39,21 @@ def _prop_native_matches_python(spark, texts):
         "doc_id string, spans array<struct<kind:string,text:string,"
         "media_ref:string,offset:int>>",
     )
-    row = classify_spans(df, renumber=False).collect()[0]
-    native_kept = [(s["kind"], s["text"], s["offset"])
-                   for s in row["clean_spans"]]
+    row = extract_pipeline(df, repartition=False).collect()[0]
+    clean = row["clean_spans"]
 
     py_kept = []
     for s in spans:
         label = S.classify_span(s["kind"], s["text"], s["media_ref"])
         if label != "boilerplate":
             kind = "media-anchor" if label == "media-anchor" else s["kind"]
-            py_kept.append((kind, s["text"], s["offset"]))
+            py_kept.append((kind, s["text"]))
 
-    assert native_kept == py_kept, texts
+    assert [(s["kind"], s["text"]) for s in clean] == py_kept, texts
+    assert [s["offset"] for s in clean] == list(range(len(clean))), texts
+    assert (row["blocks_kept"], row["blocks_dropped"]) == (
+        len(py_kept), len(spans) - len(py_kept)), texts
 
 
-def test_native_classify_matches_python_semantics(spark):
-    _prop_native_matches_python(spark)
+def test_fused_classify_matches_python_semantics(spark):
+    _prop_pipeline_matches_python(spark)

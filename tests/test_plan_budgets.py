@@ -9,7 +9,8 @@ truncates the visible plan; a regression that DROPS the checkpoint
 shows up as a jump to >= 1).
 
 Ceilings are the audited r6 values (tools/plan_audit.py) plus one
-scan of slack on the non-checkpointed entries.
+scan of slack on the non-checkpointed entries. The extraction pipeline
+is pinned separately to exactly one Python crossing.
 """
 
 import pytest
@@ -58,3 +59,23 @@ def test_scan_count_within_budget(spark, name):
         "a subtree is being recomputed per reference (PLANS.md §21) or "
         "an eager checkpoint was dropped"
     )
+
+
+@pytest.mark.parametrize("repartition", [True, False])
+def test_extraction_plan_has_one_python_crossing(corpus_df, repartition):
+    """extract_pipeline runs every per-doc step in ONE mapInArrow pass;
+    a second Python crossing (a pandas or row UDF) fails this pin."""
+    import re
+
+    from document_parser_private_spark.plans.pipeline import extract_pipeline
+
+    plan = (
+        extract_pipeline(corpus_df, repartition=repartition)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    counts = {
+        node: len(re.findall(rf"\b{node}\b", plan))
+        for node in ("MapInArrow", "ArrowEvalPython", "BatchEvalPython")
+    }
+    assert counts == {"MapInArrow": 1, "ArrowEvalPython": 0,
+                      "BatchEvalPython": 0}, counts

@@ -1,6 +1,6 @@
 """Streaming variant: availableNow drain produces the same extraction
-results as the batch pipeline; windowed watermark aggregation works on
-the events table."""
+results as the batch pipeline (extract_pipeline); windowed watermark
+aggregation works on the events table."""
 
 from document_parser_private_spark.corpus import write_corpus_parquet
 from document_parser_private_spark.streaming.stream import (
@@ -10,33 +10,31 @@ from document_parser_private_spark.streaming.stream import (
 
 
 def test_stream_matches_batch(spark, tmp_path):
+    """The streaming drain and batch extract_pipeline (the code that
+    ships) agree on every doc's counters, clean spans and sections."""
     from pyspark.sql import functions as F
-    from document_parser_private_spark.operators.classify import classify_spans
-    from document_parser_private_spark.operators.layout import layout_order_op
-    from document_parser_private_spark.operators.sections import detect_sections_op
+    from document_parser_private_spark.plans.pipeline import extract_pipeline
 
     in_dir = str(tmp_path / "in")
     write_corpus_parquet(in_dir, n=60, seed=9, shards=4)
     out_dir = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
 
-    run_stream_to_parquet(spark, in_dir, out_dir, ckpt)
-    streamed = {
-        r["doc_id"]: (r["blocks_kept"], r["clean_spans_json"])
-        for r in spark.read.parquet(out_dir).collect()
-    }
+    def by_doc(df):
+        return {
+            r["doc_id"]: (r["blocks_kept"], r["clean_spans_json"],
+                          r["sections_json"])
+            for r in df.collect()
+        }
 
-    batch_df = detect_sections_op(
-        layout_order_op(classify_spans(spark.read.parquet(in_dir),
-                                       renumber=False))
-    ).select(
+    run_stream_to_parquet(spark, in_dir, out_dir, ckpt)
+    streamed = by_doc(spark.read.parquet(out_dir))
+
+    batch = by_doc(extract_pipeline(spark.read.parquet(in_dir)).select(
         "doc_id", "blocks_kept",
         F.to_json("clean_spans").alias("clean_spans_json"),
-    )
-    batch = {
-        r["doc_id"]: (r["blocks_kept"], r["clean_spans_json"])
-        for r in batch_df.collect()
-    }
+        F.to_json("sections").alias("sections_json"),
+    ))
     assert streamed == batch
     assert len(streamed) == 60
 
