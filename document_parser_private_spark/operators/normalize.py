@@ -39,7 +39,6 @@ def ontology_df(spark, ontology: dict[str, list[str]] | None = None) -> DataFram
 
 
 _LOWER, _V2C, _INDEX = build_skill_index(SKILLS_ONTOLOGY)
-_MEMO: dict = {}
 
 
 @pandas_udf(T.StringType())

@@ -715,17 +715,19 @@ def _join_len(tokens) -> int:
 
 class _IndexBounds:
     """Precomputed per-index data for the pruned fuzzy scan: per-candidate
-    token stats plus a (n_candidates x vocab) char-count matrix so the
+    token stats, a (n_candidates x vocab) char-count matrix so the
     char-multiset overlap — the dominant bound cost — is one vectorized
     numpy minimum/sum per query instead of a Python dict loop per
-    candidate (was 60% of extraction-UDF time under cProfile).
+    candidate (was 60% of extraction-UDF time under cProfile), and a
+    token -> candidate-rows map so the token-intersection test is a few
+    numpy scatters per query.
 
     The vocab is the union of the candidates' chars: a query char outside
     it cannot overlap ANY candidate, so projecting the query histogram
     onto the vocab loses nothing."""
 
     __slots__ = ("toks", "vocab", "M", "ws_mask", "lc", "uniq", "sort",
-                 "ntok")
+                 "ntok", "nuniq", "tok_rows")
 
     def __init__(self, index: list[str]):
         import numpy as np
@@ -751,6 +753,14 @@ class _IndexBounds:
         self.uniq = np.array([t[1] for t in self.toks], dtype=np.float64)
         self.sort = np.array([t[2] for t in self.toks], dtype=np.float64)
         self.ntok = np.array([t[5] for t in self.toks], dtype=np.float64)
+        self.nuniq = np.array([len(t[0]) for t in self.toks],
+                              dtype=np.float64)
+        rows: dict[str, list[int]] = {}
+        for i, t in enumerate(self.toks):
+            for tok in t[0]:
+                rows.setdefault(tok, []).append(i)
+        self.tok_rows = {tok: np.array(r, dtype=np.intp)
+                         for tok, r in rows.items()}
 
 
 _INDEX_BOUNDS_CACHE: dict[tuple[str, ...], _IndexBounds] = {}
@@ -792,6 +802,10 @@ def best_fuzzy_match(
                    the LOWERCASED strings — LCS can't exceed the char-
                    multiset overlap, which kills the similar-length junk
                    the pure length bound lets through
+      join bound: a sorted token join only reorders the non-whitespace
+                   chars and normalizes separators to single spaces, so
+                   LCS(join_a, join_b) <= J = non-whitespace multiset
+                   overlap + min(separator counts)
       len_ratio < 1.5 (token branch):
                   subset token sets -> exactly 0.95*100 = 95
                    (token_set_ratio returns 100);
@@ -800,21 +814,27 @@ def best_fuzzy_match(
                    inter+diff_b) strings token_set_ratio compares plus
                    the sorted-all-token bound — all computable from
                    token character sums, no DP;
-                  disjoint -> 0.95 * max(len_bound(uniq), len_bound(sort))
+                  disjoint -> 0.95 * max over the two joins (token_set
+                   = ratio of the sorted-unique joins, token_sort = of
+                   the sorted-all joins) of 200*min(J, la, lb)/(la+lb);
+                  no tokens on a side -> token_set falls back to the raw
+                   ratio (covered by base), token_sort reads 0 (100 when
+                   neither side has tokens)
       len_ratio >= 1.5 (partial branch, scale 0.9 / 0.6 from lengths):
                   partial_ratio  <= 100 * min(1, common_chars / min_len)
                    (a window LCS can't beat the whole-string multiset
                    overlap, nor the window length);
                   partial_token: intersecting sets -> exactly 100;
-                   disjoint -> 100 * min(1, sorted-join char overlap /
-                   min sorted-join len), where the join overlap is the
-                   non-whitespace multiset overlap + min(spaces) —
-                   joins only reorder non-ws chars and normalize
-                   separators to single spaces.
-    Candidates whose bound cannot STRICTLY beat the current best are
-    skipped (extractOne keeps the first of equals); bullet-like phrases
-    sharing one short token with a divergent-length candidate prune to
-    zero scorer calls.
+                   disjoint -> 100 * min(J, min sorted-join len) / min
+                   sorted-join len over the sorted-all joins.
+    Every bound except the intersecting non-subset token branch is
+    computed in one vectorized numpy pass over the index (the token
+    intersection via the per-index token -> rows map), so candidates
+    that share no token with the query drop out with no per-candidate
+    Python. Candidates whose bound cannot STRICTLY beat the current best
+    are skipped (extractOne keeps the first of equals); bullet-like
+    phrases sharing one short token with a divergent-length candidate,
+    and random words sharing none, prune to zero scorer calls.
     """
     import numpy as np
 
@@ -824,7 +844,7 @@ def best_fuzzy_match(
     if n == 0:
         return None
 
-    # ---- vectorized COARSE bounds (valid upper bounds, cheap) --------
+    # ---- vectorized bounds -------------------------------------------
     qv = np.zeros(ib.M.shape[1], dtype=np.int64)
     for ch, c in q_hist.items():
         j = ib.vocab.get(ch)
@@ -832,83 +852,78 @@ def best_fuzzy_match(
             qv[j] = c
     mins = np.minimum(ib.M, qv)
     common = mins.sum(axis=1).astype(np.float64)
-    common_ws = mins[:, ib.ws_mask].sum(axis=1).astype(np.float64)
+    nonws = common - mins[:, ib.ws_mask].sum(axis=1)
+    shared = np.zeros(n, dtype=bool)
+    for tok in q_tokens:
+        rows = ib.tok_rows.get(tok)
+        if rows is not None:
+            shared[rows] = True
     lc = ib.lc
     with np.errstate(divide="ignore", invalid="ignore"):
         base = 200.0 * common / (lq + lc)
         ratio = np.maximum(lq, lc) / np.minimum(lq, lc)
         min_len = np.minimum(lq, lc)
         pfull = 100.0 * np.minimum(common, min_len) / min_len
+        # join bounds, read only where both token sets are non-empty
+        j_sort = nonws + np.minimum(q_ntok - 1, ib.ntok - 1)
+        j_uniq = nonws + np.minimum(len(q_tokens) - 1, ib.nuniq - 1)
+        sort_b = (200.0 * np.minimum(j_sort, np.minimum(q_sort, ib.sort))
+                  / (q_sort + ib.sort))
+        uniq_b = (200.0 * np.minimum(j_uniq, np.minimum(q_uniq, ib.uniq))
+                  / (q_uniq + ib.uniq))
+        mj = np.minimum(q_sort, ib.sort)
+        ptok_b = 100.0 * np.minimum(j_sort, mj) / mj
+    no_c_tok = ib.ntok == 0
+    disjoint = ~shared & ~no_c_tok if q_ntok else np.zeros(n, dtype=bool)
+    # where the token scorers can reach 100 without a join: a shared
+    # token, or no tokens on either side
+    full = shared if q_ntok else no_c_tok
+    tok_cap = np.where(disjoint, 0.95 * np.maximum(uniq_b, sort_b),
+                       np.where(full, 95.0, 0.0))
+    ptok = np.where(disjoint, ptok_b, np.where(full, 100.0, 0.0))
     pscale = np.where(ratio < 8, 0.9, 0.6)
-    # token branch cap: 0.95*100; partial branch cap: ptoken <= 100
-    cap = np.where(ratio < 1.5, 95.0,
-                   np.maximum(pscale * pfull, 0.95 * pscale * 100.0))
-    coarse = np.maximum(base, cap)
+    cap = np.where(ratio < 1.5, tok_cap,
+                   np.maximum(pscale * pfull, 0.95 * pscale * ptok))
+    bound = np.maximum(base, cap)
     empty = (lq == 0) | (lc == 0)
     if empty.any():
-        coarse = np.where(empty, np.where(lc == lq, 100.0, 0.0), coarse)
+        bound = np.where(empty, np.where(lc == lq, 100.0, 0.0), bound)
 
-    def exact_bound(i: int) -> float:
-        """The tight per-candidate bound (same math as before the numpy
-        rewrite), computed LAZILY only for coarse-bound survivors."""
-        c_tokens, c_uniq, c_sort, lci, _, c_ntok = ib.toks[i]
-        if lq == 0 or lci == 0:
-            return _len_bound(lq, lci)
-        com = float(common[i])
-        base_bound = 200.0 * com / (lq + lci)
-        inter = q_tokens & c_tokens
-        if max(lq, lci) / min(lq, lci) < 1.5:
-            if not inter:
-                token_bound = 0.95 * max(
-                    _len_bound(q_uniq, c_uniq), _len_bound(q_sort, c_sort)
-                )
-            elif q_tokens <= c_tokens or c_tokens <= q_tokens:
-                token_bound = 95.0
-            else:
-                inter_len = _join_len(inter)
-                ca = inter_len + 1 + _join_len(q_tokens - c_tokens)
-                cb = inter_len + 1 + _join_len(c_tokens - q_tokens)
-                tset_b = max(
-                    _len_bound(inter_len, ca),
-                    _len_bound(inter_len, cb),
-                    _len_bound(ca, cb),
-                )
-                token_bound = 0.95 * max(tset_b, _len_bound(q_sort, c_sort))
-            return max(base_bound, token_bound)
-        psc = 0.9 if max(lq, lci) / min(lq, lci) < 8 else 0.6
-        ml = lq if lq < lci else lci
-        pfull_b = 100.0 * (com if com < ml else ml) / ml
-        if inter:
-            ptoken_b = 100.0
-        elif q_sort == 0 or c_sort == 0:
-            ptoken_b = 100.0 if q_sort == c_sort else 0.0
-        else:
-            join_common = (com - float(common_ws[i])) + min(
-                q_ntok - 1, c_ntok - 1
-            )
-            mj = q_sort if q_sort < c_sort else c_sort
-            ptoken_b = 100.0 * (join_common if join_common < mj else mj) / mj
-        return max(base_bound, psc * pfull_b, 0.95 * psc * ptoken_b)
+    def shared_bound(i: int) -> float:
+        """Tighter token-branch bound of an intersecting, non-subset
+        candidate (`bound` is already exact for every other one)."""
+        c_tokens, _, c_sort, _, _, _ = ib.toks[i]
+        if ratio[i] >= 1.5 or q_tokens <= c_tokens or c_tokens <= q_tokens:
+            return float(bound[i])
+        inter_len = _join_len(q_tokens & c_tokens)
+        ca = inter_len + 1 + _join_len(q_tokens - c_tokens)
+        cb = inter_len + 1 + _join_len(c_tokens - q_tokens)
+        tset_b = max(
+            _len_bound(inter_len, ca),
+            _len_bound(inter_len, cb),
+            _len_bound(ca, cb),
+        )
+        token_bound = 0.95 * max(tset_b, _len_bound(q_sort, c_sort))
+        return max(float(base[i]), token_bound)
 
-    # Two-stage prune: the vectorized coarse bound filters most of the
-    # index with zero Python-per-candidate work (everything below the
-    # threshold is gone immediately); survivors get the tight exact
-    # bound, and scoring runs in descending EXACT-bound order — the same
-    # scoring set and order as a full exact-bound scan, so high scores
-    # surface early and cut later scorer calls. Tie semantics preserved
-    # exactly: equal scores resolve to the smallest index position
-    # (extractOne first-wins).
+    # The vectorized bound filters most of the index with zero
+    # Python-per-candidate work (everything below the threshold is gone
+    # immediately); intersecting survivors get the tighter token-branch
+    # bound, and scoring runs in descending EXACT-bound order, so high
+    # scores surface early and cut later scorer calls. Tie semantics
+    # preserved exactly: equal scores resolve to the smallest index
+    # position (extractOne first-wins).
     # Floor the prune at the threshold: a candidate whose bound is below
     # the threshold can never change the result — if it were the global
     # argmax its score is < threshold and the call returns None anyway,
     # and it can never beat/tie an already-found >= threshold match. For
-    # junk phrases (no token overlap, divergent lengths) every coarse
-    # bound is below the threshold and the scan does ZERO Python work
-    # past the numpy pass.
-    survivors = np.flatnonzero(coarse >= threshold)
+    # most junk phrases (no token overlap) every bound is below the
+    # threshold and the scan does ZERO Python work past the numpy pass.
+    survivors = np.flatnonzero(bound >= threshold)
     if survivors.size == 0:
         return None
-    exact = [(exact_bound(int(i)), int(i)) for i in survivors]
+    exact = [(shared_bound(i) if shared[i] else float(bound[i]), i)
+             for i in survivors.tolist()]
     exact.sort(key=lambda t: (-t[0], t[1]))
     best_score = -1.0
     best_pos = -1

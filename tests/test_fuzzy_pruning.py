@@ -118,3 +118,111 @@ def test_partial_ratio_window_semantics():
     assert S._partial_ratio("", "abc") == 0.0
     # symmetric in argument order
     assert S._partial_ratio("running spark jobs", "spark") == 100.0
+
+
+# Random-syllable words like the longtail benchmark vocabulary: they share
+# no token with the ontology and few chars beyond vowels, so they reach the
+# disjoint-token join bounds. Separators include whitespace that
+# str.split() treats as such but a plain ' ' join does not produce.
+SYLLABLES = [c + v for c in "bcdfghjklmnprstvwz" for v in "aeiou"]
+SEPARATORS = [" ", "  ", "\t", "\x1c", "\u3000", " \t "]
+
+
+@st.composite
+def syllable_word(draw):
+    w = "".join(draw(st.lists(st.sampled_from(SYLLABLES),
+                              min_size=1, max_size=4)))
+    case = draw(st.sampled_from(["lower", "capitalize", "upper"]))
+    return getattr(w, case)()
+
+
+@st.composite
+def ws_phrase(draw, words):
+    """Words (with repeats) joined by random whitespace runs."""
+    toks = draw(st.lists(words, min_size=1, max_size=5))
+    toks += draw(st.lists(st.sampled_from(toks), max_size=2))  # repeats
+    out = toks[0]
+    for t in toks[1:]:
+        out += draw(st.sampled_from(SEPARATORS)) + t
+    return out
+
+
+@st.composite
+def variant_of(draw, q):
+    """A near-duplicate of q: reordered, shortened, a token repeated, or
+    re-separated — the candidates that land near the threshold."""
+    toks = q.split()
+    kind = draw(st.sampled_from(["shuffle", "drop", "repeat", "respace"]))
+    if kind == "shuffle":
+        toks = draw(st.permutations(toks))
+    elif kind == "drop" and len(toks) > 1:
+        toks.pop(draw(st.integers(0, len(toks) - 1)))
+    elif kind == "repeat":
+        toks.append(draw(st.sampled_from(toks)))
+    sep = draw(st.sampled_from(SEPARATORS))
+    return sep.join(toks)
+
+
+@st.composite
+def disjoint_case(draw):
+    words = st.one_of(syllable_word(), st.sampled_from(WORDS))
+    q = draw(ws_phrase(words))
+    idx = draw(st.lists(st.one_of(ws_phrase(words), variant_of(q)),
+                        min_size=1, max_size=15))
+    return q, idx
+
+
+@given(case=disjoint_case(), thr=st.sampled_from([40.0, 60.0, 80.0, 90.0]))
+@settings(max_examples=400, deadline=None)
+def test_pruned_equals_naive_disjoint_tokens(case, thr):
+    q, idx = case
+    assert S.best_fuzzy_match(q, idx, thr) == naive_best(q, idx, thr)
+
+
+@given(q=ws_phrase(syllable_word()), thr=st.sampled_from([60.0, 80.0]))
+@settings(max_examples=200, deadline=None)
+def test_pruned_equals_naive_against_ontology(q, thr):
+    from document_parser_private_spark.operators.resume import _INDEX
+    assert S.best_fuzzy_match(q, _INDEX, thr) == naive_best(q, _INDEX, thr)
+
+
+@given(case=disjoint_case())
+@settings(max_examples=300, deadline=None)
+def test_bound_never_below_score(case):
+    """Per pair: with a one-candidate index and the threshold AT its
+    score, the candidate survives only if its bound >= its score."""
+    q, idx = case
+    for c in idx:
+        assert S.best_fuzzy_match(q, [c], S.wratio(q, c)) == c, (q, c)
+
+
+def test_whitespace_only_query():
+    """No tokens on one or both sides: token_set falls back to the raw
+    ratio and token_sort / partial_token read 0 (100 when neither side
+    has tokens) — the bounds must still cover every score."""
+    idx = ["   ", "\t", "\u3000 \x1c", " a ", "a", "ab  cd", "\t\tx\t"]
+    for q in ["   ", "\t", " \u3000", "\x1c\x1c\x1c\x1c"]:
+        for thr in (0.0, 30.0, 50.0, 60.0, 80.0, 95.0):
+            assert S.best_fuzzy_match(q, idx, thr) == naive_best(q, idx, thr)
+        for c in idx:
+            assert S.best_fuzzy_match(q, [c], S.wratio(q, c)) == c, (q, c)
+
+
+def test_disjoint_phrase_scores_no_candidate(monkeypatch):
+    """A random-word phrase sharing no token with the ontology index is
+    rejected by the vectorized bounds alone: zero wratio calls. (Bounding
+    the disjoint token branch by string length alone let 15-21 of the 45
+    candidates through for each of these phrases.)"""
+    from document_parser_private_spark.operators.resume import _INDEX
+    calls = []
+    real = S.wratio
+
+    def counted(a, b):
+        calls.append(b)
+        return real(a, b)
+
+    monkeypatch.setattr(S, "wratio", counted)
+    for q in ["Gehe Zavulafu", "DIGISASA", "Necavoho", "Hurake Dofera",
+              "kaji\twuwa\u3000kaji"]:
+        assert S.best_fuzzy_match(q, _INDEX, 80.0) is None
+    assert calls == []

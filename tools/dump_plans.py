@@ -2,7 +2,14 @@
 
 Usage: python tools/dump_plans.py OUT_DIR SUFFIX [query ...]
 Writes OUT_DIR/<query>_<SUFFIX>.txt for each query (all queries when
-none given). Plan-only — nothing executes.
+none given), reading tables from $SPARK_GRAFT_SF_DIR (default: the
+sf0.1 test tables) on $SPARK_GRAFT_CPUS cores (default 32).
+
+Building a query's DataFrame is not always plan-only: queries that
+eagerly localCheckpoint an intermediate (lm_score, bm25_terms,
+cm_heavy_hitters, minhash_candidates, ...) and bloom_prune's plan-time
+collect() run those jobs at the chosen scale while the plan is built.
+Point SPARK_GRAFT_SF_DIR at a small scale factor for a quick dump.
 """
 
 from __future__ import annotations
@@ -14,6 +21,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    if sys.argv[1:2] in (["-h"], ["--help"]):
+        print(__doc__)
+        return
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
     out_dir, suffix = sys.argv[1], sys.argv[2]
     names = sys.argv[3:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
